@@ -268,7 +268,7 @@ def test_filtered_probe_widening_restores_recall(spark, sf_oracle):
     assert report.recall_widened >= report.recall_fixed
     assert report.nprobe_widened > report.nprobe_fixed
     assert report.recall_widened >= 0.9, report
-    ann.clear_index_cache()
+    ann.IVF_CACHE.clear()
 
 
 def test_filtered_widening_caps_at_full_probe_and_equals_exact(spark):

@@ -361,7 +361,8 @@ def test_graph_serve_twins_equal_build_rows(spark):
     from ydb_vector_search_demo_spark.plans.catalog import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    ann.clear_graph_store_cache()
+    ann.GRAPH_STORE_CACHE.clear()
+    ann.KNN_GRAPH_EDGE_CACHE.clear()
     for build, serve in [
         ("graph_pagerank_label", "graph_pagerank_serve"),
         ("graph_label_prop", "graph_label_prop_serve"),
@@ -371,8 +372,8 @@ def test_graph_serve_twins_equal_build_rows(spark):
         want = sorted(tuple(r) for r in QUERIES[build](spark, sf).collect())
         got = sorted(tuple(r) for r in QUERIES[serve](spark, sf).collect())
         assert got == want, f"{serve} diverged from {build}"
-    assert len(ann._KNN_GRAPH_EDGE_CACHE) == 1  # one shared build
-    path = next(iter(ann._KNN_GRAPH_EDGE_CACHE.values()))
+    assert len(ann.KNN_GRAPH_EDGE_CACHE) == 1  # one shared build
+    path = next(iter(ann.KNN_GRAPH_EDGE_CACHE.values()))
     import os as _os
 
     mtime = max(
@@ -383,4 +384,5 @@ def test_graph_serve_twins_equal_build_rows(spark):
         _os.path.getmtime(_os.path.join(path, f)) for f in _os.listdir(path)
     )
     assert mtime2 == mtime, "serve call rewrote the edge store"
-    ann.clear_graph_store_cache()
+    ann.GRAPH_STORE_CACHE.clear()
+    ann.KNN_GRAPH_EDGE_CACHE.clear()

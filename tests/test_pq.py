@@ -157,7 +157,7 @@ def test_ivfpq_recall_report(spark, tmp_path):
     ).collect()[0]
     assert row.recall >= 0.8, row
     assert row.bytes_per_vector == 12.0
-    ann.clear_index_cache()
+    ann.IVF_CACHE.clear()
 
 
 # --------------------------------------------------------- codebook drift

@@ -29,6 +29,11 @@ from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import (
+    SessionCache,
+    cache_identity,
+    store_path,
+)
 from ydb_vector_search_demo_spark.functions.vector import distance
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
@@ -59,12 +64,6 @@ def _choose_probe_level(
         if count_at(level) >= min_candidates:
             return level
     return levels[-1]
-
-
-def _hashable(v):
-    """Cache-key normalization: list-valued build kwargs (keep_cols)
-    become tuples so the session-cache key stays hashable."""
-    return tuple(v) if isinstance(v, list) else v
 
 
 def _doubling_levels(start: int, maximum: int) -> list[int]:
@@ -257,18 +256,10 @@ def build_ivf_index(
     return IvfIndex(assigned, centroids, id_col, vector_col)
 
 
-# Session-scope index cache: build once per (cache_key, k_clusters),
-# probe many times — the build/probe split a production IVF has (the
-# build is a periodic batch job, probes are the steady-state workload).
-_IVF_CACHE: dict[tuple, IvfIndex] = {}
-
-
-def clear_index_cache() -> None:
-    """Drop every session-cached IVF index and release its persisted
-    assignment (benchmarks use this to make each build trial real)."""
-    for idx in _IVF_CACHE.values():
-        idx.assigned.unpersist()
-    _IVF_CACHE.clear()
+# Build once, probe many times — the build/probe split a production IVF
+# has (the build is a periodic batch job, probes are the steady-state
+# workload). clear() unpersists each index's assignment.
+IVF_CACHE = SessionCache(release=lambda idx: idx.assigned.unpersist())
 
 
 def get_or_build_ivf_index(
@@ -277,39 +268,20 @@ def get_or_build_ivf_index(
     cache_key: object | None = None,
     **build_kwargs,
 ) -> IvfIndex:
-    """Return a cached IvfIndex for (cache_key, input relation,
-    k_clusters, normalized build params), building it on first use.
+    """Return the session-cached IvfIndex for (cache_key, input
+    relation, build params), building it on first use
+    (:func:`~ydb_vector_search_demo_spark.caches.cache_identity`).
     ``cache_key`` names the corpus (e.g. its path); pass None to always
     rebuild. Keeps per-call benchmarks honest: probe-time measurements
-    no longer pay a KMeans refit per query.
-
-    The key also folds in the input DataFrame's ``semanticHash()`` —
-    two callers passing DIFFERENT relations (e.g. a filtered corpus)
-    under the same cache_key must not silently share one index — and
-    normalizes ``build_kwargs`` against :func:`build_ivf_index`'s
-    defaults, so kwargs passed explicitly at their default value hit
-    the same entry as kwargs omitted."""
-    key = None
-    if cache_key is not None:
-        import inspect
-
-        # the build parameters are part of the identity — a sampled-fit
-        # index must never be returned to a caller asking for a
-        # full-fit one (or a different seed/max_iter)
-        params = inspect.signature(build_ivf_index).parameters
-        norm = tuple(
-            (name, _hashable(build_kwargs.get(name, p.default)))
-            for name, p in params.items()
-            if name not in ("embeddings", "k_clusters")
-        )
-        key = (cache_key, embeddings.semanticHash(), k_clusters, norm)
-        cached = _IVF_CACHE.get(key)
-        if cached is not None:
-            return cached
-    index = build_ivf_index(embeddings, k_clusters=k_clusters, **build_kwargs)
-    if key is not None:
-        _IVF_CACHE[key] = index
-    return index
+    no longer pay a KMeans refit per query."""
+    key = cache_identity(
+        cache_key, build_ivf_index, embeddings,
+        k_clusters=k_clusters, **build_kwargs,
+    )
+    return IVF_CACHE.get_or_build(
+        key,
+        lambda: build_ivf_index(embeddings, k_clusters=k_clusters, **build_kwargs),
+    )
 
 
 def write_ivf_partitioned(index: IvfIndex, path: str) -> None:
@@ -680,13 +652,7 @@ def build_kmeans_tree_index(
     return KMeansTreeIndex(assigned, centroids_top, centroids_sub, id_col, vector_col)
 
 
-_TREE_CACHE: dict[tuple, KMeansTreeIndex] = {}
-
-
-def clear_tree_cache() -> None:
-    for idx in _TREE_CACHE.values():
-        idx.assigned.unpersist()
-    _TREE_CACHE.clear()
+TREE_CACHE = SessionCache(release=lambda idx: idx.assigned.unpersist())
 
 
 def get_or_build_kmeans_tree(
@@ -696,29 +662,18 @@ def get_or_build_kmeans_tree(
     cache_key: object | None = None,
     **build_kwargs,
 ) -> KMeansTreeIndex:
-    """Session-scope tree cache — same identity rules as
-    :func:`get_or_build_ivf_index`: corpus name + input relation's
-    semanticHash + default-normalized build params."""
-    key = None
-    if cache_key is not None:
-        import inspect
-
-        params = inspect.signature(build_kmeans_tree_index).parameters
-        norm = tuple(
-            (name, _hashable(build_kwargs.get(name, p.default)))
-            for name, p in params.items()
-            if name not in ("embeddings", "k_top", "k_sub")
-        )
-        key = (cache_key, embeddings.semanticHash(), k_top, k_sub, norm)
-        cached = _TREE_CACHE.get(key)
-        if cached is not None:
-            return cached
-    index = build_kmeans_tree_index(
-        embeddings, k_top=k_top, k_sub=k_sub, **build_kwargs
+    """Session-cached tree — the :func:`get_or_build_ivf_index`
+    contract."""
+    key = cache_identity(
+        cache_key, build_kmeans_tree_index, embeddings,
+        k_top=k_top, k_sub=k_sub, **build_kwargs,
     )
-    if key is not None:
-        _TREE_CACHE[key] = index
-    return index
+    return TREE_CACHE.get_or_build(
+        key,
+        lambda: build_kmeans_tree_index(
+            embeddings, k_top=k_top, k_sub=k_sub, **build_kwargs
+        ),
+    )
 
 
 def write_tree_partitioned(index: KMeansTreeIndex, path: str) -> None:
@@ -2582,22 +2537,7 @@ def write_graph_store(
     )
 
 
-_GRAPH_STORE_CACHE: dict = {}
-
-
-def _session_store_path(cache: dict, kind: str, key: tuple) -> tuple:
-    """Shared mechanics of the session-scoped store caches (r14
-    review: two verbatim copies): memoize a deterministic /tmp path
-    per key. Returns (path, hit) — on a miss the caller writes the
-    store at `path` and records it with cache[key] = path."""
-    import hashlib
-    import tempfile
-
-    path = cache.get(key)
-    if path is not None:
-        return path, True
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/{kind}_{tag}", False
+GRAPH_STORE_CACHE = SessionCache()
 
 
 def get_or_write_graph_store(
@@ -2608,34 +2548,30 @@ def get_or_write_graph_store(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
 ) -> str:
-    """Session-scoped graph-store build cache (the
-    get_or_write_rotated_store / get_or_build_ivf_index contract): the
-    two bucket-partitioned writes of :func:`write_graph_store` are
-    paid once per (corpus, layout) key under a deterministic /tmp
-    path; probes (:func:`graph_search_parquet`) reuse it. This is the
-    build/probe split — the build is the periodic batch job, the
-    graded serving row prices the steady-state probe (r7 verdict
-    task: the pre-fix row rebuilt and rewrote the store on every
-    execution, 29.3 s vs the probe's ~1 s)."""
-    key = (cache_key, int(n_buckets), id_col, vector_col)
-    path, hit = _session_store_path(
-        _GRAPH_STORE_CACHE, "ydbvs_graph_store", key
+    """Session-cached graph store (the :func:`get_or_build_ivf_index`
+    contract): the two bucket-partitioned writes of
+    :func:`write_graph_store` are paid once per (corpus, input
+    relations, layout) under a deterministic temp path; probes
+    (:func:`graph_search_parquet`) reuse it. This is the build/probe
+    split — the build is the periodic batch job, the serving row prices
+    the steady-state probe."""
+    key = cache_identity(
+        cache_key, write_graph_store, graph, vectors,
+        n_buckets=n_buckets, id_col=id_col, vector_col=vector_col,
     )
-    if not hit:
+
+    def write() -> str:
+        path = store_path("ydbvs_graph_store", key)
         write_graph_store(
             graph, vectors, path, n_buckets=n_buckets, id_col=id_col,
             vector_col=vector_col,
         )
-        _GRAPH_STORE_CACHE[key] = path
-    return path
+        return path
+
+    return GRAPH_STORE_CACHE.get_or_build(key, write)
 
 
-def clear_graph_store_cache() -> None:
-    _GRAPH_STORE_CACHE.clear()
-    _KNN_GRAPH_EDGE_CACHE.clear()
-
-
-_KNN_GRAPH_EDGE_CACHE: dict = {}
+KNN_GRAPH_EDGE_CACHE = SessionCache()
 
 
 def get_or_write_knn_graph_edges(
@@ -2645,25 +2581,26 @@ def get_or_write_knn_graph_edges(
     k: int = 3,
     metric: str = "cosine",
 ) -> DataFrame:
-    """Session-scoped kNN-graph EDGE build cache — the
+    """Session-cached kNN-graph EDGES — the
     :func:`get_or_write_graph_store` contract applied to the graph
     ANALYTICS consumers (pagerank / label-prop / triangles / k-core):
     the :func:`knn_graph_bucketed` build (the dominant cost of every
-    in-row graph analytics query — BASELINE r13 plan audit: 4.5-7.7 s
-    rows, all build-dominated) is paid ONCE per (corpus, bucket_col,
-    k, metric) key, its edges written src-sorted to a deterministic
-    /tmp parquet path, and every subsequent analytics pass re-reads
-    the materialized relation — in production the periodic batch
-    graph build feeding many downstream analytics jobs. Iterating
+    in-row graph analytics query) is paid ONCE per (corpus, input
+    relation, bucket_col, k, metric), its edges written src-sorted to
+    a deterministic temp parquet path, and every subsequent analytics
+    pass re-reads the materialized relation — in production the
+    periodic batch graph build feeding many downstream analytics jobs. Iterating
     consumers still checkpoint once per query (reading parquet is
     cheap; re-planning it per power step is not). Returns the
     parquet-backed (src, dst, score, rank) relation."""
-    key = (cache_key, bucket_col, int(k), metric)
-    spark = embeddings.sparkSession
-    path, hit = _session_store_path(
-        _KNN_GRAPH_EDGE_CACHE, "ydbvs_knn_edges", key
+    key = cache_identity(
+        cache_key, knn_graph_bucketed, embeddings,
+        bucket_col=bucket_col, k=k, metric=metric,
     )
-    if not hit:
+    spark = embeddings.sparkSession
+
+    def write() -> str:
+        path = store_path("ydbvs_knn_edges", key)
         (
             knn_graph_bucketed(embeddings, bucket_col, k=k, metric=metric)
             .select("src", "dst", "score", "rank")
@@ -2672,8 +2609,9 @@ def get_or_write_knn_graph_edges(
             .write.mode("overwrite")
             .parquet(path)
         )
-        _KNN_GRAPH_EDGE_CACHE[key] = path
-    return spark.read.parquet(path)
+        return path
+
+    return spark.read.parquet(KNN_GRAPH_EDGE_CACHE.get_or_build(key, write))
 
 
 def _pruned_fetch(

@@ -28,6 +28,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import (
+    SessionCache,
+    cache_identity,
+    store_path,
+)
 from ydb_vector_search_demo_spark.functions.vector import distance
 
 
@@ -388,7 +393,7 @@ def write_normalized_store(
     )
 
 
-_NORM_STORE_CACHE: dict = {}
+NORM_STORE_CACHE = SessionCache()
 
 
 def get_or_write_normalized_store(
@@ -397,22 +402,23 @@ def get_or_write_normalized_store(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
 ) -> str:
-    """Session-scoped build cache for the normalized store (the
-    get_or_write_rotated_store contract): the normalize-and-persist
-    pass is paid once per corpus key; probes reuse it."""
-    import hashlib
-    import tempfile
+    """Session-cached normalized store (the
+    ann.get_or_build_ivf_index contract): the normalize-and-persist
+    pass is paid once per (corpus, input relation, columns); probes
+    reuse it."""
+    key = cache_identity(
+        cache_key, write_normalized_store, embeddings,
+        id_col=id_col, vector_col=vector_col,
+    )
 
-    key = (cache_key, id_col, vector_col)
-    path = _NORM_STORE_CACHE.get(key)
-    if path is None:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/ydbvs_normstore_{tag}"
+    def write() -> str:
+        path = store_path("ydbvs_normstore", key)
         write_normalized_store(
             embeddings, path, id_col=id_col, vector_col=vector_col
         )
-        _NORM_STORE_CACHE[key] = path
-    return path
+        return path
+
+    return NORM_STORE_CACHE.get_or_build(key, write)
 
 
 def knn_cosine_normalized_parquet(

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import SessionCache, cache_identity
 from ydb_vector_search_demo_spark.functions.textstats import token_count, tokens
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
@@ -788,7 +789,7 @@ def build_bm25_index(
         "term", id_col, "tf", "dl", "df"
     )
     # plain persist owned by the returned index (lifecycle:
-    # clear_bm25_cache / caller unpersist) — NOT dedup._persist, whose
+    # BM25_CACHE.clear() / caller unpersist) — NOT dedup._persist, whose
     # release_persisted() runs between bench queries and tests and
     # would silently strip the cache's storage
     return Bm25Index(
@@ -820,28 +821,19 @@ def read_bm25_index(spark: SparkSession, path: str,
     )
 
 
-_BM25_CACHE: dict = {}
+BM25_CACHE = SessionCache(release=lambda idx: idx.postings.unpersist())
 
 
 def get_or_build_bm25_index(
     docs: DataFrame, cache_key: str, **kwargs
 ) -> Bm25Index:
-    """Session-scoped build cache (same contract as
-    ann.get_or_build_ivf_index): the postings build is paid once per
-    (corpus, analyzer) key; probes reuse it."""
-    key = (cache_key, kwargs.get("stem", False),
-           tuple(kwargs.get("stopwords") or ()))
-    idx = _BM25_CACHE.get(key)
-    if idx is None:
-        idx = build_bm25_index(docs, **kwargs)
-        _BM25_CACHE[key] = idx
-    return idx
-
-
-def clear_bm25_cache() -> None:
-    for idx in _BM25_CACHE.values():
-        idx.postings.unpersist()
-    _BM25_CACHE.clear()
+    """Session-cached postings (the ann.get_or_build_ivf_index
+    contract): the build is paid once per (corpus, input relation,
+    columns, analyzer); probes reuse it."""
+    key = cache_identity(cache_key, build_bm25_index, docs, **kwargs)
+    return BM25_CACHE.get_or_build(
+        key, lambda: build_bm25_index(docs, **kwargs)
+    )
 
 
 def bm25_index_batch_topk(

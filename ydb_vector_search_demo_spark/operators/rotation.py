@@ -36,6 +36,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import (
+    SessionCache,
+    cache_identity,
+    store_path,
+)
 from ydb_vector_search_demo_spark.functions.vector import distance, dot
 from ydb_vector_search_demo_spark.operators.knn import knn_scores
 
@@ -252,7 +257,7 @@ def write_rotated_store(
     ).write.mode("overwrite").parquet(path)
 
 
-_STORE_CACHE: dict = {}
+ROTATED_STORE_CACHE = SessionCache()
 
 
 def get_or_write_rotated_store(
@@ -263,32 +268,28 @@ def get_or_write_rotated_store(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
 ) -> str:
-    """Session-scoped rotated-store build cache (the
-    ann.get_or_build_ivf_index / retrieval.get_or_build_bm25_index
-    contract): the rotate-and-persist pass is paid once per
-    (corpus, basis, dims) key under a deterministic /tmp path; probes
-    (:func:`pca_search_parquet` / :func:`pca_batch_search_parquet`)
-    reuse it. This is the SERVING split for the rotation lever — the
-    build is the periodic batch job, the store probe is the steady
-    state that reads d'/d of the float bytes."""
-    import hashlib
-    import tempfile
+    """Session-cached rotated store (the ann.get_or_build_ivf_index
+    contract): the rotate-and-persist pass is paid once per (corpus,
+    input relation, basis, dims, columns) under a deterministic temp
+    path; probes (:func:`pca_search_parquet` /
+    :func:`pca_batch_search_parquet`) reuse it. This is the SERVING
+    split for the rotation lever — the build is the periodic batch
+    job, the store probe is the steady state that reads d'/d of the
+    float bytes."""
+    key = cache_identity(
+        cache_key, write_rotated_store, embeddings,
+        rotation=rotation, dims=dims, id_col=id_col, vector_col=vector_col,
+    )
 
-    key = (cache_key, int(dims), id_col, vector_col)
-    path = _STORE_CACHE.get(key)
-    if path is None:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-        path = f"{tempfile.gettempdir()}/ydbvs_rotated_{tag}"
+    def write() -> str:
+        path = store_path("ydbvs_rotated", key)
         write_rotated_store(
             embeddings, path, rotation, dims=dims, id_col=id_col,
             vector_col=vector_col,
         )
-        _STORE_CACHE[key] = path
-    return path
+        return path
 
-
-def clear_rotated_store_cache() -> None:
-    _STORE_CACHE.clear()
+    return ROTATED_STORE_CACHE.get_or_build(key, write)
 
 
 def pca_search_parquet(

@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import SessionCache
 from ydb_vector_search_demo_spark.functions import strings as S
 from ydb_vector_search_demo_spark.functions import textstats as T
 from ydb_vector_search_demo_spark.functions import vector as V
@@ -3119,7 +3120,7 @@ def _sign_code_col() -> Column:
     )
 
 
-_PINNED_GRAPH_CACHE: dict = {}
+PINNED_GRAPH_CACHE = SessionCache()
 
 
 def _pinned_graph_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3131,10 +3132,10 @@ def _pinned_graph_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows price serving and maintenance, not re-building. (The append
     row builds its own graph over the corpus SPLIT, so it stays
     uncached.)"""
-    g = _PINNED_GRAPH_CACHE.get(sf_dir)
-    if g is None:
+
+    def build() -> DataFrame:
         embs = _t(spark, sf_dir, "embeddings")
-        g = (
+        return (
             ann.knn_graph_bucketed(
                 embs.withColumn("_code", _sign_code_col()), "_code",
                 k=_GRAPH_FIXED_DEGREE, metric="cosine",
@@ -3142,8 +3143,8 @@ def _pinned_graph_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst", "score")
             .localCheckpoint(eager=True)
         )
-        _PINNED_GRAPH_CACHE[sf_dir] = g
-    return g
+
+    return PINNED_GRAPH_CACHE.get_or_build(sf_dir, build)
 
 
 def _beam_round_ctes(score_rel: str) -> list[str]:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ydb_vector_search_demo_spark.caches import SessionCache
 from ydb_vector_search_demo_spark.functions.vector import l2_norm
 from ydb_vector_search_demo_spark.operators.ann import ivf_assign, tree_assign
 from ydb_vector_search_demo_spark.operators.pq import encode_expr
@@ -361,39 +362,42 @@ def _scd2_meta_path(hbase_dir: str) -> str:
 # metadata cost (a JVM meta-file read + a parquet schema inference per
 # call) into one read per version. This caches METADATA keyed on the
 # store's own immutable layout — never query results.
-_SCD2_META_CACHE: dict = {}
-_SCD2_SCHEMA_CACHE: dict = {}
+SCD2_META_CACHE = SessionCache()
+SCD2_SCHEMA_CACHE = SessionCache()
 
 
 def _scd2_store_reader(spark: SparkSession, hdir: str):
     """Partitioned store read with the version dir's cached schema —
     skips per-call footer-based schema inference."""
-    schema = _SCD2_SCHEMA_CACHE.get(hdir)
-    if schema is None:
-        schema = spark.read.parquet(hdir).schema
-        _SCD2_SCHEMA_CACHE[hdir] = schema
+    schema = SCD2_SCHEMA_CACHE.get_or_build(
+        hdir, lambda: spark.read.parquet(hdir).schema
+    )
     return spark.read.schema(schema).parquet(hdir)
 
 
 def _read_scd2_meta(spark: SparkSession, hbase_dir: str) -> dict:
+    """A copy of the version dir's meta (callers may mutate it)."""
+    return dict(
+        SCD2_META_CACHE.get_or_build(
+            hbase_dir, lambda: _load_scd2_meta(spark, hbase_dir)
+        )
+    )
+
+
+def _load_scd2_meta(spark: SparkSession, hbase_dir: str) -> dict:
     import json as _json
 
-    cached = _SCD2_META_CACHE.get(hbase_dir)
-    if cached is not None:
-        return dict(cached)
     sc = spark.sparkContext
     jvm = sc._jvm
     path = jvm.org.apache.hadoop.fs.Path(_scd2_meta_path(hbase_dir))
     fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
     stream = fs.open(path)
     try:
-        meta = _json.loads(
+        return _json.loads(
             jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
         )
     finally:
         stream.close()
-    _SCD2_META_CACHE[hbase_dir] = dict(meta)
-    return meta
 
 
 def _write_scd2_meta(spark: SparkSession, hbase_dir: str, meta: dict) -> None:
@@ -410,7 +414,7 @@ def _write_scd2_meta(spark: SparkSession, hbase_dir: str, meta: dict) -> None:
         out.close()
     # keep the write-once cache coherent even if a caller re-writes
     # meta before publishing (the cache key is the version dir path)
-    _SCD2_META_CACHE[hbase_dir] = dict(meta)
+    SCD2_META_CACHE.put(hbase_dir, dict(meta))
 
 
 def _scd2_list_delta_ids(spark: SparkSession, ddir: str) -> list:
